@@ -159,25 +159,32 @@ def load_bronze(
     if "telco" in by_ds:
         tables["telco"] = _load_telco(spark, [r.path for r in by_ds["telco"]])
 
-    # lineage records (reference: ingest_bronze.py:151-162 metadata JSON):
-    # one small aggregate per dataset — rows/dataset counts, not per-file
-    # driver loops
-    if not lineage:
-        return BronzeResult(tables=tables, lineage=None, unknown_files=unknown)
-    lineage_df = None
-    if tables:
-        parts = [
-            df.agg(
-                F.lit(name).alias("dataset"),
-                F.count("*").alias("record_count"),
-                F.countDistinct("source_filename").alias("file_count"),
-                F.max("ingestion_timestamp").alias("ingested_at"),
-            )
-            for name, df in tables.items()
-        ]
-        lineage_df = parts[0]
-        for p in parts[1:]:
-            lineage_df = lineage_df.unionByName(p)
     return BronzeResult(
-        tables=tables, lineage=lineage_df, unknown_files=unknown
+        tables=tables,
+        lineage=lineage_of(tables) if lineage else None,
+        unknown_files=unknown,
     )
+
+
+def lineage_of(tables: dict[str, DataFrame]) -> DataFrame | None:
+    """Lineage records (reference: ingest_bronze.py:151-162 metadata
+    JSON): one small aggregate per dataset — rows/dataset counts, not
+    a Python loop per file. Pass the tables as written to the lake: over
+    unwritten plans ``ingestion_timestamp`` is a fresh
+    ``current_timestamp()`` per evaluation, so ``ingested_at`` would
+    describe a different evaluation than the one landed."""
+    parts = [
+        df.agg(
+            F.lit(name).alias("dataset"),
+            F.count("*").alias("record_count"),
+            F.countDistinct("source_filename").alias("file_count"),
+            F.max("ingestion_timestamp").alias("ingested_at"),
+        )
+        for name, df in tables.items()
+    ]
+    if not parts:
+        return None
+    lineage_df = parts[0]
+    for p in parts[1:]:
+        lineage_df = lineage_df.unionByName(p)
+    return lineage_df

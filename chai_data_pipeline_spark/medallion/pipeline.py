@@ -8,6 +8,14 @@ stop on first layer failure, journal persisted as JSON. The execution
 substrate is one SparkSession and a parquet lake instead of
 pandas+Postgres+MinIO.
 
+Each table is computed once. The parquet lake is the materialization:
+after a layer writes a table, every later step (counts, the bronze
+``_lineage`` records, the next layer, the DQ pass, dependent gold
+views) reads the lake copy instead of re-running the plan that
+produced it, and the DQ results are collected once and written from
+the collected rows. With ``write=False`` nothing is landed and every
+step runs on the in-memory plans.
+
 Usage:
     python -m chai_data_pipeline_spark.medallion.pipeline \
         --landing tests/fixtures --lake /tmp/lake
@@ -21,7 +29,7 @@ import os
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.writers import overwrite_table
 from . import bronze as bronze_mod
@@ -53,19 +61,39 @@ def run_pipeline(
         _write_journal(journal, lake_dir)
         return journal
 
+    def land(
+        tables: dict[str, DataFrame],
+        layer: str,
+        name: str,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+    ) -> DataFrame:
+        """Write ``df`` as ``<layer>/<name>`` and store the lake copy in
+        ``tables[name]``, so every later step scans the written files
+        instead of recomputing ``df``. The read pins ``df``'s schema:
+        partition column types are not re-inferred from directory
+        names. With ``write=False`` the plan itself is stored."""
+        if write:
+            path = os.path.join(lake_dir, layer, name)
+            overwrite_table(df, path, partition_by)
+            df = spark.read.schema(df.schema).parquet(path)
+        tables[name] = df
+        return df
+
     # ---- bronze ----------------------------------------------------------
     t0 = time.perf_counter()
     try:
-        br = bronze_mod.load_bronze(spark, landing_dir)
-        counts = {name: df.count() for name, df in br.tables.items()}
-        if write:
-            for name, df in br.tables.items():
-                part = ["date"] if name == "covid" else None
-                overwrite_table(df, os.path.join(lake_dir, "bronze", name), part)
-            if br.lineage is not None:
-                overwrite_table(
-                    br.lineage, os.path.join(lake_dir, "bronze", "_lineage")
-                )
+        br = bronze_mod.load_bronze(spark, landing_dir, lineage=False)
+        bronze_tables: dict[str, DataFrame] = {}
+        for name, df in br.tables.items():
+            land(bronze_tables, "bronze", name, df,
+                 ["date"] if name == "covid" else None)
+        if write and bronze_tables:
+            overwrite_table(
+                bronze_mod.lineage_of(bronze_tables),
+                os.path.join(lake_dir, "bronze", "_lineage"),
+            )
+        counts = {k: v.count() for k, v in bronze_tables.items()}
         journal["layers"]["bronze"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
@@ -78,37 +106,22 @@ def run_pipeline(
     # ---- silver ----------------------------------------------------------
     t0 = time.perf_counter()
     try:
-        silver_tables = {}
-        if "users" in br.tables:
-            silver_tables["clean_users"] = silver_mod.transform_users(
-                br.tables["users"], asof
-            )
-        if "posts" in br.tables:
-            silver_tables["clean_posts"] = silver_mod.transform_posts(
-                br.tables["posts"], asof
-            )
-        if "covid" in br.tables:
-            silver_tables["clean_covid"] = silver_mod.transform_covid(
-                br.tables["covid"], asof
-            )
-        if "telco" in br.tables:
-            silver_tables["clean_telco"] = silver_mod.transform_telco(
-                br.tables["telco"], asof
-            )
-        if write:
-            for name, df in silver_tables.items():
-                part = ["record_date"] if name == "clean_covid" else None
-                overwrite_table(df, os.path.join(lake_dir, "silver", name), part)
-                # re-read so downstream plans scan the lake (pruned),
-                # not the full bronze lineage again
-                silver_tables[name] = spark.read.parquet(
-                    os.path.join(lake_dir, "silver", name)
-                )
-        s_counts = {k: v.count() for k, v in silver_tables.items()}
+        silver_tables: dict[str, DataFrame] = {}
+        for src, name, transform in (
+            ("users", "clean_users", silver_mod.transform_users),
+            ("posts", "clean_posts", silver_mod.transform_posts),
+            ("covid", "clean_covid", silver_mod.transform_covid),
+            ("telco", "clean_telco", silver_mod.transform_telco),
+        ):
+            if src in bronze_tables:
+                land(silver_tables, "silver", name,
+                     transform(bronze_tables[src], asof),
+                     ["record_date"] if name == "clean_covid" else None)
+        counts = {k: v.count() for k, v in silver_tables.items()}
         journal["layers"]["silver"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": s_counts,
+            "records": counts,
         }
     except Exception as exc:  # noqa: BLE001
         return fail("silver", exc)
@@ -119,15 +132,19 @@ def run_pipeline(
         rules = quality_mod.rules_from_config(quality_mod.REFERENCE_RULES)
         rules = [r for r in rules if r.table in silver_tables]
         results = quality_mod.run_checks(spark, silver_tables, rules, asof)
-        score = quality_mod.quality_score(results)
-        checks = [row.asDict() for row in results.collect()]
+        rows = results.collect()
+        score = quality_mod.score_of(rows)
         if write:
-            overwrite_table(results, os.path.join(lake_dir, "silver", "_dq_logs"))
+            # one row per rule: one file, not one per local-data slice
+            overwrite_table(
+                spark.createDataFrame(rows, results.schema).coalesce(1),
+                os.path.join(lake_dir, "silver", "_dq_logs"),
+            )
         journal["layers"]["quality"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
             "quality_score": score,
-            "checks": checks,
+            "checks": [row.asDict() for row in rows],
         }
     except Exception as exc:  # noqa: BLE001
         return fail("quality", exc)
@@ -135,39 +152,39 @@ def run_pipeline(
     # ---- gold ------------------------------------------------------------
     t0 = time.perf_counter()
     try:
-        gold_tables = {}
+        gold_tables: dict[str, DataFrame] = {}
         if "clean_covid" in silver_tables:
             cc = silver_tables["clean_covid"]
-            gold_tables["daily_covid_summary"] = gold_mod.daily_covid_summary(cc)
-            gold_tables["covid_country_trends"] = gold_mod.covid_country_trends(cc)
-            gold_tables["covid_global_summary"] = gold_mod.covid_global_summary(
-                cc, data_quality_score=int(round(score))
+            land(gold_tables, "gold", "daily_covid_summary",
+                 gold_mod.daily_covid_summary(cc))
+            land(gold_tables, "gold", "covid_country_trends",
+                 gold_mod.covid_country_trends(cc))
+            summary = land(
+                gold_tables, "gold", "covid_global_summary",
+                gold_mod.covid_global_summary(
+                    cc, data_quality_score=int(round(score))
+                ),
             )
-            gold_tables["v_data_completeness"] = gold_mod.v_data_completeness(
-                gold_tables["covid_global_summary"]
-            )
-            gold_tables["v_trend_analysis"] = gold_mod.v_trend_analysis(cc)
+            land(gold_tables, "gold", "v_data_completeness",
+                 gold_mod.v_data_completeness(summary))
+            land(gold_tables, "gold", "v_trend_analysis",
+                 gold_mod.v_trend_analysis(cc))
         if "clean_users" in silver_tables:
             cu = silver_tables["clean_users"]
-            gold_tables["user_company_analysis"] = gold_mod.user_company_analysis(cu)
-            gold_tables["user_analytics_summary"] = gold_mod.user_analytics_summary(
-                cu, asof.split(" ")[0]
-            )
+            land(gold_tables, "gold", "user_company_analysis",
+                 gold_mod.user_company_analysis(cu))
+            land(gold_tables, "gold", "user_analytics_summary",
+                 gold_mod.user_analytics_summary(cu, asof.split(" ")[0]))
             if "clean_posts" in silver_tables:
-                gold_tables["user_engagement_metrics"] = (
-                    gold_mod.user_engagement_metrics(
-                        cu, silver_tables["clean_posts"]
-                    )
-                )
-        g_counts = {}
-        for name, df in gold_tables.items():
-            if write:
-                overwrite_table(df, os.path.join(lake_dir, "gold", name))
-            g_counts[name] = df.count()
+                land(gold_tables, "gold", "user_engagement_metrics",
+                     gold_mod.user_engagement_metrics(
+                         cu, silver_tables["clean_posts"]
+                     ))
+        counts = {k: v.count() for k, v in gold_tables.items()}
         journal["layers"]["gold"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": g_counts,
+            "records": counts,
         }
         # daily_aggregates derives FROM the journal (per-layer counts,
         # quality score, durations) — built after the gold journal

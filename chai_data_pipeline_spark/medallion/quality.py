@@ -22,10 +22,11 @@ the same PASS/FAIL + percentage contract as the reference
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -192,12 +193,16 @@ def run_checks(
     return out
 
 
+def score_of(rows: Sequence[Row]) -> float:
+    """passed/total percentage over collected result rows (reference:
+    validate_silver.py:48-53)."""
+    passed = sum(1 for r in rows if r.passed)
+    return round(100.0 * passed / len(rows), 2) if rows else 100.0
+
+
 def quality_score(results: DataFrame) -> float:
-    """passed/total percentage (reference: validate_silver.py:48-53)."""
-    row = results.agg(
-        F.count_if(F.col("passed")).alias("p"), F.count("*").alias("t")
-    ).first()
-    return round(100.0 * row.p / row.t, 2) if row.t else 100.0
+    """:func:`score_of` over a results DataFrame."""
+    return score_of(results.select("passed").collect())
 
 
 # The reference's 12 hard-coded checks, as config

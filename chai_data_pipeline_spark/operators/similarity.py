@@ -426,14 +426,14 @@ def ann_topk_ivf(
     in the DuckDB oracle."""
     from ..functions import dround
 
-    if arrow:
+    # an empty query side has no vector for numpy to score against; the
+    # fold form below returns the empty top-k for it
+    if arrow and (qrow := query.first()) is not None:
         import numpy as np
         import pandas as pd
 
         assigned = ivf_assign_arrow(df, n_centroids, vec_col, id_col)
-        qvec = np.array(
-            [float(x) for x in query.first()[0]], dtype=np.float64
-        )
+        qvec = np.array([float(x) for x in qrow[0]], dtype=np.float64)
         qnorm = float(np.sqrt((qvec * qvec).sum()))
 
         def _cos_impl(vecs):

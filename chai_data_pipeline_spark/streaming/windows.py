@@ -510,15 +510,22 @@ def _set_ephemeral_retain(spark) -> "callable":
     ``SPARK_GRAFT_STREAM_RETAIN`` overrides the bound (a long-lived
     production job that restarts from these checkpoints should carry
     its own recovery-window sizing; empty string = leave the session
-    default untouched). Returns a restore thunk for the caller's
-    ``finally``.
+    default untouched; anything else that is not an integer raises
+    ``ValueError`` before any conf is set). Returns a restore thunk for
+    the caller's ``finally``.
     """
     val = os.environ.get("SPARK_GRAFT_STREAM_RETAIN", "2")
     if not val:
         return lambda: None
+    try:
+        retain = int(val)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_STREAM_RETAIN must be an integer or empty, got {val!r}"
+        ) from None
     key = "spark.sql.streaming.minBatchesToRetain"
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, val)
+    spark.conf.set(key, str(retain))
     if prev is None:
         return lambda: spark.conf.unset(key)
     return lambda: spark.conf.set(key, prev)

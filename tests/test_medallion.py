@@ -39,6 +39,68 @@ def test_bronze_routing_and_counts(journal_and_lake):
     assert journal["layers"]["bronze"]["unknown_files"] == []
 
 
+def test_bronze_lineage_describes_landed_tables(spark, journal_and_lake):
+    """``_lineage`` is aggregated from the bronze tables as landed: its
+    ``ingested_at`` is their max ``ingestion_timestamp`` (not a later
+    evaluation of ``current_timestamp()``) and its ``record_count`` is
+    the journal's bronze count."""
+    journal, lake = journal_and_lake
+    counts = journal["layers"]["bronze"]["records"]
+    lineage = {
+        r.dataset: r
+        for r in spark.read.parquet(
+            os.path.join(lake, "bronze", "_lineage")
+        ).collect()
+    }
+    assert set(lineage) == set(counts)
+    for ds, n in counts.items():
+        landed = spark.read.parquet(os.path.join(lake, "bronze", ds))
+        latest = landed.agg(F.max("ingestion_timestamp")).first()[0]
+        assert lineage[ds].ingested_at == latest, ds
+        assert lineage[ds].record_count == n, ds
+
+
+def test_dq_logs_match_journal(spark, journal_and_lake):
+    """``_dq_logs`` holds exactly the journal's checks, in one file, and
+    the journal's score is the score of those rows."""
+    from chai_data_pipeline_spark.medallion.quality import quality_score
+
+    journal, lake = journal_and_lake
+    quality = journal["layers"]["quality"]
+    logs = spark.read.parquet(os.path.join(lake, "silver", "_dq_logs"))
+    assert len(logs.inputFiles()) == 1
+
+    def by_name(checks):
+        return sorted(checks, key=lambda c: c["check_name"])
+
+    assert by_name(r.asDict() for r in logs.collect()) == by_name(
+        quality["checks"]
+    )
+    assert quality["quality_score"] == quality_score(logs)
+
+
+def test_pipeline_without_write_matches_write_run(
+    spark, journal_and_lake, tmp_path
+):
+    """``write=False`` runs every layer on the in-memory plans: same
+    records, checks and score as the write run, and no table landed."""
+    from chai_data_pipeline_spark.medallion.pipeline import run_pipeline
+
+    journal, _ = journal_and_lake
+    lake = tmp_path / "lake"
+    dry = run_pipeline(spark, FIXTURES, str(lake), asof=ASOF, write=False)
+    assert dry["status"] == "SUCCESS"
+    for layer in ("bronze", "silver", "gold"):
+        assert dry["layers"][layer]["records"] == (
+            journal["layers"][layer]["records"]
+        ), layer
+    for key in ("checks", "quality_score"):
+        assert dry["layers"]["quality"][key] == (
+            journal["layers"]["quality"][key]
+        )
+    assert os.listdir(lake) == ["pipeline_metadata.json"]
+
+
 def test_silver_users_cleaning(spark, journal_and_lake):
     _, lake = journal_and_lake
     users = spark.read.parquet(os.path.join(lake, "silver", "clean_users"))

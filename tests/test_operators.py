@@ -234,6 +234,33 @@ def test_ann_ivf_recovers_query_vector(spark, sf_dir):
     assert ivf_ids == exact_ids  # n_probe = all lists → exhaustive
 
 
+def test_ann_ivf_empty_query_same_result_both_forms(spark, sf_dir):
+    """An empty query side gives the same empty top-k, with the same
+    schema, from the numpy form as from the fold form."""
+    from chai_data_pipeline_spark.operators.similarity import ann_topk_ivf
+    from chai_data_pipeline_spark.session import load_tables
+
+    emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
+    q = emb.filter(F.col("vec_id") < 0).select(F.col("embedding").alias("qv"))
+    fold = ann_topk_ivf(emb, q, k=5, n_centroids=8, n_probe=2, arrow=False)
+    arrow = ann_topk_ivf(emb, q, k=5, n_centroids=8, n_probe=2, arrow=True)
+    assert arrow.schema == fold.schema
+    assert arrow.collect() == fold.collect() == []
+
+
+def test_stream_retain_rejects_non_integer(spark, monkeypatch):
+    """A malformed SPARK_GRAFT_STREAM_RETAIN fails with an error naming
+    the variable, before any session conf is touched."""
+    from chai_data_pipeline_spark.streaming.windows import _set_ephemeral_retain
+
+    key = "spark.sql.streaming.minBatchesToRetain"
+    before = spark.conf.get(key, None)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_RETAIN", "two")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_RETAIN"):
+        _set_ephemeral_retain(spark)
+    assert spark.conf.get(key, None) == before
+
+
 def test_compact_preserves_rows(spark, sf_dir, tmp_path_factory):
     from chai_data_pipeline_spark.session import load_tables
     from chai_data_pipeline_spark.sources.writers import compact
