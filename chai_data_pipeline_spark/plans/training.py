@@ -598,7 +598,7 @@ WITH q AS (
 ),
 -- cutoff 90: data-relative (scores are bimodal 80/100 on this corpus;
 -- the original 50 kept 100% of docs — a dead filter leg, the round-8
--- vacuous-parity class). Changed round 10 + re-pinned in _FORCE_FRONT.
+-- vacuous-parity class).
 filtered AS (SELECT * FROM q WHERE score >= 90),
 kept AS (
     SELECT * FROM (
