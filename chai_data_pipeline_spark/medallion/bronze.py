@@ -19,8 +19,15 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from .. import schemas
 from ..sources.readers import (
@@ -166,6 +173,30 @@ def load_bronze(
     )
 
 
+# ``_lineage``: one row per dataset, the dataset name and then the
+# :func:`lineage_metrics` values in their order
+LINEAGE_SCHEMA = StructType([
+    StructField("dataset", StringType()),
+    StructField("record_count", LongType()),
+    StructField("file_count", LongType()),
+    StructField("ingested_at", TimestampType()),
+])
+
+
+def lineage_metrics() -> list[Column]:
+    """The per-dataset lineage aggregates: ``record_count``,
+    ``file_count`` and ``ingested_at``. :func:`lineage_of` aggregates
+    them over landed tables; the pipeline observes the same expressions
+    on each bronze write, so both read one definition. Distinct
+    aggregates are not allowed in observed metrics, hence
+    ``size(collect_set)`` for the file count."""
+    return [
+        F.count(F.lit(1)).alias("record_count"),
+        F.size(F.collect_set("source_filename")).cast("long").alias("file_count"),
+        F.max("ingestion_timestamp").alias("ingested_at"),
+    ]
+
+
 def lineage_of(tables: dict[str, DataFrame]) -> DataFrame | None:
     """Lineage records (reference: ingest_bronze.py:151-162 metadata
     JSON): one small aggregate per dataset — rows/dataset counts, not
@@ -174,12 +205,7 @@ def lineage_of(tables: dict[str, DataFrame]) -> DataFrame | None:
     ``current_timestamp()`` per evaluation, so ``ingested_at`` would
     describe a different evaluation than the one landed."""
     parts = [
-        df.agg(
-            F.lit(name).alias("dataset"),
-            F.count("*").alias("record_count"),
-            F.countDistinct("source_filename").alias("file_count"),
-            F.max("ingestion_timestamp").alias("ingested_at"),
-        )
+        df.agg(F.lit(name).alias("dataset"), *lineage_metrics())
         for name, df in tables.items()
     ]
     if not parts:

@@ -16,10 +16,18 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from ..functions.numeric import dround
 from ..operators.windows import top_k_per_group
+from .frames import literal_frame
 
 
 def daily_covid_summary(clean_covid: DataFrame) -> DataFrame:
@@ -330,6 +338,18 @@ def pipeline_performance_view(lineage: DataFrame, durations: dict[str, float]) -
     )
 
 
+DAILY_AGGREGATES_SCHEMA = StructType([
+    StructField("aggregate_date", DateType()),
+    StructField("data_sources_processed", IntegerType()),
+    StructField("total_records_processed", LongType()),
+    StructField("bronze_records", IntegerType()),
+    StructField("silver_records", IntegerType()),
+    StructField("gold_records", IntegerType()),
+    StructField("data_quality_score", IntegerType()),
+    StructField("processing_duration_seconds", IntegerType()),
+])
+
+
 def daily_aggregates(spark, journal: dict, asof: str) -> DataFrame:
     """gold.daily_aggregates (reference: aggregate_gold.py:31-41 schema,
     83-176 population): one row per pipeline run day with per-layer
@@ -356,25 +376,16 @@ def daily_aggregates(spark, journal: dict, asof: str) -> DataFrame:
     )
     q = layers.get("quality", {}).get("quality_score")
     score = 85 if q is None else int(round(float(q)))
-    row = [
-        (
-            asof.split(" ")[0],
-            len(layers.get("bronze", {}).get("records", {})),
-            b + s + g,
-            b,
-            s,
-            g,
-            score,
-            int(round(dur)),
-        )
-    ]
-    return spark.createDataFrame(
-        row,
-        "aggregate_date string, data_sources_processed int,"
-        " total_records_processed bigint, bronze_records int,"
-        " silver_records int, gold_records int, data_quality_score int,"
-        " processing_duration_seconds int",
-    ).withColumn("aggregate_date", F.col("aggregate_date").cast("date"))
+    return literal_frame(spark, DAILY_AGGREGATES_SCHEMA, [(
+        asof.split(" ")[0],
+        len(layers.get("bronze", {}).get("records", {})),
+        b + s + g,
+        b,
+        s,
+        g,
+        score,
+        int(round(dur)),
+    )])
 
 
 def v_trend_analysis(clean_covid: DataFrame) -> DataFrame:

@@ -8,13 +8,19 @@ stop on first layer failure, journal persisted as JSON. The execution
 substrate is one SparkSession and a parquet lake instead of
 pandas+Postgres+MinIO.
 
-Each table is computed once. The parquet lake is the materialization:
-after a layer writes a table, every later step (counts, the bronze
-``_lineage`` records, the next layer, the DQ pass, dependent gold
-views) reads the lake copy instead of re-running the plan that
-produced it, and the DQ results are collected once and written from
-the collected rows. With ``write=False`` nothing is landed and every
-step runs on the in-memory plans.
+Each table is computed once, and every Spark job of a write run lands
+a table, apart from the one DQ ``collect`` and the listing of the
+landing files. The parquet lake is the materialization: after a layer
+writes a table, the next layer, the DQ pass and dependent gold views
+read the lake copy instead of re-running the plan that produced it.
+The journal's record counts and the bronze ``_lineage`` values
+(record count, file count, latest ingestion time) are metrics observed
+on the writes themselves, so they cost no pass of their own. The DQ
+results are collected once; ``_dq_logs``, ``_lineage`` and
+``daily_aggregates`` are written from driver-side values as
+one-partition literal frames. With ``write=False`` nothing is landed,
+every step runs on the in-memory plans and the counts are ``count()``
+jobs.
 
 Usage:
     python -m chai_data_pipeline_spark.medallion.pipeline \
@@ -29,13 +35,15 @@ import os
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.writers import overwrite_table
 from . import bronze as bronze_mod
 from . import gold as gold_mod
 from . import quality as quality_mod
 from . import silver as silver_mod
+from .frames import literal_frame
 
 
 def run_pipeline(
@@ -61,43 +69,62 @@ def run_pipeline(
         _write_journal(journal, lake_dir)
         return journal
 
+    # per layer: the lake copy (or, without write, the plan) of each
+    # landed table, and its record count
+    tables: dict[str, dict[str, DataFrame]] = {}
+    records: dict[str, dict[str, int]] = {}
+
     def land(
-        tables: dict[str, DataFrame],
         layer: str,
         name: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
-    ) -> DataFrame:
+        metrics: list[Column] | None = None,
+    ) -> dict:
         """Write ``df`` as ``<layer>/<name>`` and store the lake copy in
-        ``tables[name]``, so every later step scans the written files
-        instead of recomputing ``df``. The read pins ``df``'s schema:
-        partition column types are not re-inferred from directory
-        names. With ``write=False`` the plan itself is stored."""
+        ``tables[layer][name]``, so every later step scans the written
+        files instead of recomputing ``df``. The read pins ``df``'s
+        schema: partition column types are not re-inferred from
+        directory names. ``metrics`` (default: the record count) are
+        observed on the write itself, so taking them runs no job of its
+        own; they are returned, and ``record_count`` goes to
+        ``records[layer][name]``. With ``write=False`` the plan itself
+        is stored and counted."""
         if write:
+            obs = Observation()
+            metrics = metrics or [F.count(F.lit(1)).alias("record_count")]
             path = os.path.join(lake_dir, layer, name)
-            overwrite_table(df, path, partition_by)
+            overwrite_table(df.observe(obs, *metrics), path, partition_by)
             df = spark.read.schema(df.schema).parquet(path)
-        tables[name] = df
-        return df
+            observed = obs.get
+        else:
+            observed = {"record_count": df.count()}
+        tables.setdefault(layer, {})[name] = df
+        records.setdefault(layer, {})[name] = observed["record_count"]
+        return observed
 
     # ---- bronze ----------------------------------------------------------
     t0 = time.perf_counter()
     try:
         br = bronze_mod.load_bronze(spark, landing_dir, lineage=False)
-        bronze_tables: dict[str, DataFrame] = {}
-        for name, df in br.tables.items():
-            land(bronze_tables, "bronze", name, df,
-                 ["date"] if name == "covid" else None)
-        if write and bronze_tables:
+        lineage = {
+            name: land("bronze", name, df,
+                       ["date"] if name == "covid" else None,
+                       bronze_mod.lineage_metrics())
+            for name, df in br.tables.items()
+        }
+        if write and lineage:
+            # observed metrics come back in lineage_metrics() order
             overwrite_table(
-                bronze_mod.lineage_of(bronze_tables),
+                literal_frame(spark, bronze_mod.LINEAGE_SCHEMA, [
+                    (name, *m.values()) for name, m in lineage.items()
+                ]),
                 os.path.join(lake_dir, "bronze", "_lineage"),
             )
-        counts = {k: v.count() for k, v in bronze_tables.items()}
         journal["layers"]["bronze"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": counts,
+            "records": records.get("bronze", {}),
             "unknown_files": br.unknown_files,
         }
     except Exception as exc:  # noqa: BLE001 — fail-fast journal contract
@@ -106,7 +133,7 @@ def run_pipeline(
     # ---- silver ----------------------------------------------------------
     t0 = time.perf_counter()
     try:
-        silver_tables: dict[str, DataFrame] = {}
+        bronze_tables = tables.get("bronze", {})
         for src, name, transform in (
             ("users", "clean_users", silver_mod.transform_users),
             ("posts", "clean_posts", silver_mod.transform_posts),
@@ -114,14 +141,13 @@ def run_pipeline(
             ("telco", "clean_telco", silver_mod.transform_telco),
         ):
             if src in bronze_tables:
-                land(silver_tables, "silver", name,
-                     transform(bronze_tables[src], asof),
+                land("silver", name, transform(bronze_tables[src], asof),
                      ["record_date"] if name == "clean_covid" else None)
-        counts = {k: v.count() for k, v in silver_tables.items()}
+        silver_tables = tables.get("silver", {})
         journal["layers"]["silver"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": counts,
+            "records": records.get("silver", {}),
         }
     except Exception as exc:  # noqa: BLE001
         return fail("silver", exc)
@@ -135,9 +161,8 @@ def run_pipeline(
         rows = results.collect()
         score = quality_mod.score_of(rows)
         if write:
-            # one row per rule: one file, not one per local-data slice
             overwrite_table(
-                spark.createDataFrame(rows, results.schema).coalesce(1),
+                literal_frame(spark, quality_mod.RESULTS_SCHEMA, rows),
                 os.path.join(lake_dir, "silver", "_dq_logs"),
             )
         journal["layers"]["quality"] = {
@@ -152,39 +177,36 @@ def run_pipeline(
     # ---- gold ------------------------------------------------------------
     t0 = time.perf_counter()
     try:
-        gold_tables: dict[str, DataFrame] = {}
         if "clean_covid" in silver_tables:
             cc = silver_tables["clean_covid"]
-            land(gold_tables, "gold", "daily_covid_summary",
+            land("gold", "daily_covid_summary",
                  gold_mod.daily_covid_summary(cc))
-            land(gold_tables, "gold", "covid_country_trends",
+            land("gold", "covid_country_trends",
                  gold_mod.covid_country_trends(cc))
-            summary = land(
-                gold_tables, "gold", "covid_global_summary",
-                gold_mod.covid_global_summary(
-                    cc, data_quality_score=int(round(score))
-                ),
-            )
-            land(gold_tables, "gold", "v_data_completeness",
-                 gold_mod.v_data_completeness(summary))
-            land(gold_tables, "gold", "v_trend_analysis",
-                 gold_mod.v_trend_analysis(cc))
+            land("gold", "covid_global_summary",
+                 gold_mod.covid_global_summary(
+                     cc, data_quality_score=int(round(score))
+                 ))
+            land("gold", "v_data_completeness",
+                 gold_mod.v_data_completeness(
+                     tables["gold"]["covid_global_summary"]
+                 ))
+            land("gold", "v_trend_analysis", gold_mod.v_trend_analysis(cc))
         if "clean_users" in silver_tables:
             cu = silver_tables["clean_users"]
-            land(gold_tables, "gold", "user_company_analysis",
+            land("gold", "user_company_analysis",
                  gold_mod.user_company_analysis(cu))
-            land(gold_tables, "gold", "user_analytics_summary",
+            land("gold", "user_analytics_summary",
                  gold_mod.user_analytics_summary(cu, asof.split(" ")[0]))
             if "clean_posts" in silver_tables:
-                land(gold_tables, "gold", "user_engagement_metrics",
+                land("gold", "user_engagement_metrics",
                      gold_mod.user_engagement_metrics(
                          cu, silver_tables["clean_posts"]
                      ))
-        counts = {k: v.count() for k, v in gold_tables.items()}
         journal["layers"]["gold"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": counts,
+            "records": records.get("gold", {}),
         }
         # daily_aggregates derives FROM the journal (per-layer counts,
         # quality score, durations) — built after the gold journal

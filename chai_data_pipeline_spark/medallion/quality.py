@@ -7,15 +7,20 @@ actual 12 checks are hard-coded one-SQL-query-each
 config-driven design real AND batches execution:
 
 - a rule spec (dataclass / plain dict) compiles to a Column predicate;
-- ALL predicate rules for a table run in ONE aggregation over ONE scan
-  (``sum(when(pred,1))`` per rule) — the reference's 12 separate scans
-  become 1-2 jobs, which at 100 TB is the difference between one pass
-  and twelve;
-- referential rules compile to left-anti joins (one small job each);
-- freshness rules fold into the same single-pass aggregate via max(ts).
+- ALL predicate and freshness rules for a table run as ONE aggregation
+  over ONE scan (``count_if(pred)`` per predicate rule, ``max(ts)`` per
+  freshness rule). Its single row is unpivoted into one result row per
+  rule by ONE projection, ``inline(array(struct(...) per rule))``. A
+  union of per-rule selects over that row would not do: column pruning
+  gives each branch its own aggregate, so the table would be scanned
+  once per rule. The reference's 12 separate scans become one scan per
+  table, which at 100 TB is the difference between one pass and twelve;
+- referential rules compile to left-anti joins and unique rules to a
+  grouped count (one small job each).
 
 Outputs a results DataFrame (check_name, check_type, table_name,
-failed_count, total_count, passed) + an aggregate quality score —
+failed_count, total_count, passed; empty when no rule applies) + an
+aggregate quality score —
 the same PASS/FAIL + percentage contract as the reference
 (validate_silver.py:25-60), reproducible via the injected ``asof``.
 """
@@ -28,6 +33,15 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .frames import literal_frame
 
 
 @dataclass
@@ -92,13 +106,39 @@ def _violation_predicate(rule: Rule) -> Column:
     raise ValueError(f"not a predicate rule: {rule.rule_type}")
 
 
+RESULTS_SCHEMA = StructType([
+    StructField("check_name", StringType()),
+    StructField("check_type", StringType()),
+    StructField("table_name", StringType()),
+    StructField("failed_count", LongType()),
+    StructField("total_count", LongType()),
+    StructField("passed", BooleanType()),
+])
+
+
+def _result(
+    r: Rule, table: str, failed: Column, total: Column | None = None
+) -> Column:
+    """One results row for rule ``r`` as a struct in RESULTS_SCHEMA order."""
+    failed = failed.cast("long")
+    return F.struct(
+        F.lit(r.name).alias("check_name"),
+        F.lit(r.rule_type).alias("check_type"),
+        F.lit(table).alias("table_name"),
+        failed.alias("failed_count"),
+        (F.lit(None) if total is None else total).cast("long").alias("total_count"),
+        (failed == 0).alias("passed"),
+    )
+
+
 def run_checks(
     spark: SparkSession,
     tables: dict[str, DataFrame],
     rules: list[Rule],
     asof: str,
 ) -> DataFrame:
-    """Execute all rules; returns the results DataFrame."""
+    """Execute all rules; returns the results DataFrame (RESULTS_SCHEMA,
+    empty when no rule applies)."""
     results: list[DataFrame] = []
 
     by_table: dict[str, list[Rule]] = {}
@@ -108,85 +148,53 @@ def run_checks(
     for table, t_rules in by_table.items():
         df = tables[table]
         agg_exprs: list[Column] = [F.count("*").alias("__total")]
-        agg_rules: list[Rule] = []
+        agg_rows: list[Column] = []
         for r in t_rules:
+            i = len(agg_rows)
             if r.rule_type in ("not_null", "format", "range", "business"):
                 agg_exprs.append(
-                    F.count_if(_violation_predicate(r)).alias(f"__v_{len(agg_rules)}")
+                    F.count_if(_violation_predicate(r)).alias(f"__v_{i}")
                 )
-                agg_rules.append(r)
+                failed = F.col(f"__v_{i}")
             elif r.rule_type == "freshness":
-                agg_exprs.append(
-                    F.max(F.col(r.ts_column)).alias(f"__f_{len(agg_rules)}")
-                )
-                agg_rules.append(r)
+                agg_exprs.append(F.max(F.col(r.ts_column)).alias(f"__f_{i}"))
+                age_h = (
+                    F.lit(asof).cast("timestamp").cast("double")
+                    - F.col(f"__f_{i}").cast("timestamp").cast("double")
+                ) / 3600.0
+                failed = F.when(
+                    F.col(f"__f_{i}").isNull() | (age_h > r.max_age_hours),
+                    F.lit(1),
+                ).otherwise(0)
+            else:
+                continue
+            agg_rows.append(_result(r, table, failed, F.col("__total")))
 
-        if agg_rules:
-            # the single fused pass: every predicate + freshness rule for
-            # this table in one aggregation over one scan
+        if agg_rows:
+            # the single fused pass: one aggregation over one scan, then
+            # one projection that unpivots its row into one row per rule
             row_df = df.agg(*agg_exprs)
-            parts = []
-            for i, r in enumerate(agg_rules):
-                if r.rule_type == "freshness":
-                    age_h = (
-                        F.lit(asof).cast("timestamp").cast("double")
-                        - F.col(f"__f_{i}").cast("timestamp").cast("double")
-                    ) / 3600.0
-                    failed = F.when(
-                        F.col(f"__f_{i}").isNull()
-                        | (age_h > r.max_age_hours),
-                        F.lit(1),
-                    ).otherwise(0)
-                else:
-                    failed = F.col(f"__v_{i}")
-                parts.append(
-                    row_df.select(
-                        F.lit(r.name).alias("check_name"),
-                        F.lit(r.rule_type).alias("check_type"),
-                        F.lit(table).alias("table_name"),
-                        failed.cast("long").alias("failed_count"),
-                        F.col("__total").cast("long").alias("total_count"),
-                        (failed == 0).alias("passed"),
-                    )
-                )
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
-            results.append(merged)
+            results.append(row_df.select(F.inline(F.array(*agg_rows))))
 
         for r in t_rules:
             if r.rule_type == "referential":
-                ref = tables[r.ref_table]
-                orphans = df.join(ref, on=r.keys, how="left_anti")
-                results.append(
-                    orphans.agg(
-                        F.count("*").alias("failed_count")
-                    ).select(
-                        F.lit(r.name).alias("check_name"),
-                        F.lit("referential").alias("check_type"),
-                        F.lit(table).alias("table_name"),
-                        F.col("failed_count").cast("long"),
-                        F.lit(None).cast("long").alias("total_count"),
-                        (F.col("failed_count") == 0).alias("passed"),
-                    )
-                )
+                bad = df.join(tables[r.ref_table], on=r.keys, how="left_anti")
             elif r.rule_type == "unique":
-                dups = (
+                bad = (
                     df.groupBy(*r.keys)
                     .agg(F.count("*").alias("__n"))
                     .filter(F.col("__n") > 1)
                 )
-                results.append(
-                    dups.agg(F.count("*").alias("failed_count")).select(
-                        F.lit(r.name).alias("check_name"),
-                        F.lit("unique").alias("check_type"),
-                        F.lit(table).alias("table_name"),
-                        F.col("failed_count").cast("long"),
-                        F.lit(None).cast("long").alias("total_count"),
-                        (F.col("failed_count") == 0).alias("passed"),
-                    )
+            else:
+                continue
+            results.append(
+                bad.agg(F.count("*").alias("__failed")).select(
+                    F.inline(F.array(_result(r, table, F.col("__failed"))))
                 )
+            )
 
+    if not results:
+        return literal_frame(spark, RESULTS_SCHEMA, [])
     out = results[0]
     for r_df in results[1:]:
         out = out.unionByName(r_df)

@@ -323,3 +323,130 @@ def test_land_url_file_scheme(tmp_path):
     assert os.path.exists(out)
     with open(out) as fh:
         assert fh.read() == '[{"id": 1}]'
+
+
+def _landing(tmp_path, users_json: str | None = None, only: str = "") -> str:
+    """A copy of the fixture landing dir: only the files whose name
+    starts with ``only``, and ``users_json`` as the users file's text."""
+    import shutil
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for name in os.listdir(FIXTURES):
+        if name.startswith(only):
+            shutil.copy(os.path.join(FIXTURES, name), landing / name)
+            if users_json is not None and name.startswith("users_"):
+                (landing / name).write_text(users_json)
+    return str(landing)
+
+
+def test_telco_only_landing_has_no_checks(spark, tmp_path):
+    """No rule applies to a landing dir of telco files alone: the DQ
+    layer lands an empty ``_dq_logs`` and scores 100."""
+    from chai_data_pipeline_spark.medallion.pipeline import run_pipeline
+
+    lake = str(tmp_path / "lake")
+    journal = run_pipeline(
+        spark, _landing(tmp_path, only="Telco-"), lake, asof=ASOF
+    )
+    assert journal["status"] == "SUCCESS", journal
+    assert journal["layers"]["silver"]["records"] == {"clean_telco": 5}
+    assert journal["layers"]["quality"]["checks"] == []
+    assert journal["layers"]["quality"]["quality_score"] == 100.0
+    logs = spark.read.parquet(os.path.join(lake, "silver", "_dq_logs"))
+    assert logs.columns == [
+        "check_name", "check_type", "table_name",
+        "failed_count", "total_count", "passed",
+    ]
+    assert logs.count() == 0
+
+
+def test_run_checks_scans_each_table_once(spark, journal_and_lake):
+    """The predicate and freshness rules of a table run as one
+    aggregate over one scan: in the executed plan ``clean_covid`` is
+    scanned once, and ``clean_users`` twice (the fused aggregate and
+    the ``posts_user_fk`` anti-join). Counted in the final adaptive
+    plan only, not in its "Initial Plan" section."""
+    from chai_data_pipeline_spark.medallion.quality import (
+        REFERENCE_RULES,
+        rules_from_config,
+        run_checks,
+    )
+
+    _, lake = journal_and_lake
+    silver = os.path.join(lake, "silver")
+    tables = {
+        name: spark.read.parquet(os.path.join(silver, name))
+        for name in ("clean_users", "clean_posts", "clean_covid", "clean_telco")
+    }
+    results = run_checks(
+        spark, tables, rules_from_config(REFERENCE_RULES), ASOF
+    )
+    assert len(results.collect()) == 12
+    plan = results._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    scans = [line for line in final.split("\n") if "FileScan" in line]
+
+    def scanned(name):
+        return sum(f"/silver/{name}]" in line for line in scans)
+
+    assert scanned("clean_covid") == 1, final
+    assert scanned("clean_users") == 2, final
+    assert scanned("clean_posts") == 1, final
+
+
+def test_pipeline_takes_counts_from_the_writes(spark, tmp_path, monkeypatch):
+    """With ``DataFrame.count`` raising, the write run still succeeds:
+    its record counts and ``_lineage`` are observed on the writes. They
+    equal what the landed tables hold. A zero-row users file lands with
+    count 0 without blocking on its observation."""
+    import threading
+
+    from chai_data_pipeline_spark.medallion.pipeline import run_pipeline
+
+    landing = _landing(tmp_path, users_json="[]")
+    lake = str(tmp_path / "lake")
+    frame_cls = type(spark.range(0))
+
+    def no_count(self):
+        raise AssertionError("count() job in a write run")
+
+    out: dict = {}
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "count", no_count)
+        run = threading.Thread(
+            target=lambda: out.update(
+                journal=run_pipeline(spark, landing, lake, asof=ASOF)
+            ),
+            daemon=True,
+        )
+        run.start()
+        run.join(timeout=600)
+    assert not run.is_alive(), "run_pipeline blocked"
+    journal = out["journal"]
+    assert journal["status"] == "SUCCESS", journal
+
+    assert journal["layers"]["bronze"]["records"]["users"] == 0
+    assert journal["layers"]["silver"]["records"]["clean_users"] == 0
+    for layer in ("bronze", "silver", "gold"):
+        for name, n in journal["layers"][layer]["records"].items():
+            landed = spark.read.parquet(os.path.join(lake, layer, name))
+            assert landed.count() == n, (layer, name)
+
+    lineage = spark.read.parquet(os.path.join(lake, "bronze", "_lineage"))
+    assert len(lineage.inputFiles()) == 1
+    assert sorted(lineage.columns) == sorted(
+        ["dataset", "record_count", "file_count", "ingested_at"]
+    )
+    for row in lineage.collect():
+        landed = spark.read.parquet(os.path.join(lake, "bronze", row.dataset))
+        expect = landed.agg(
+            F.count("*").alias("record_count"),
+            F.countDistinct("source_filename").alias("file_count"),
+            F.max("ingestion_timestamp").alias("ingested_at"),
+        ).first()
+        assert row.record_count == expect.record_count, row
+        assert row.file_count == expect.file_count, row
+        assert row.ingested_at == expect.ingested_at, row
+    daily = spark.read.parquet(os.path.join(lake, "gold", "daily_aggregates"))
+    assert len(daily.inputFiles()) == 1
